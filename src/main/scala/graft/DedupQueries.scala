@@ -1424,8 +1424,7 @@ object DedupQueries {
         .select(col("vec_id"), col("embedding"))
       val graphs = Ann.nnDescent(sub, "vec_id", "embedding",
         k = 5, rounds = 2, nlist = 8)
-      val exact = Ann.knnJoinExact(sub, sub, "vec_id", "embedding", 5,
-          localSolve = true) // feeds a checkpoint: the one-task kernel wins
+      val exact = Ann.knnJoinExact(sub, sub, "vec_id", "embedding", 5)
         .select(col("probe_id").as("src"), col("id").as("dst"))
         .localCheckpoint(true)
       val rows = graphs.zipWithIndex.map { case (g, r) =>
@@ -2320,12 +2319,8 @@ object DedupQueries {
         // materialize the trimmed projection once instead of re-scanning
         // the full-text parquet each time
         .localCheckpoint()
-      val pairs = graft.ops.Spread.toSessionParallelism(
-        // the one-task pair kernel leaves a single partition; the
-        // edit-distance stage below is the query's heavy per-row work
-        // and must fan back out (Spread is identity on real corpora)
-        graft.dedup.SortedNeighborhood
-          .candidatePairs(d, "k", Seq("key"), window = 8), "a_id")
+      val pairs = graft.dedup.SortedNeighborhood
+        .candidatePairs(d, "k", Seq("key"), window = 8)
       val fl4 = (c: Column) => floor(c * 10000 + lit(0.5)) / 10000
       pairs
         .join(d.select(col("k").as("a_id"), col("n").as("an")), "a_id")

@@ -369,19 +369,6 @@ object Dedup {
           t => xxhash64(t)).as("hs"))
       .select(col("id"), col("hs"), size(col("hs")).as("m"))
       .localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): posting lists +
-    // exact-Jaccard verification in one task over the SAME checkpointed
-    // hashed-token relation (the prefix filter is lossless, so both
-    // paths emit exactly the J ≥ t pairs). Tighter cap than the shared
-    // default: candidate volume is Σ df(token)², super-linear in the doc
-    // count, so one task only wins while that stays small.
-    if (graft.graph.LocalSolve.threshold(df.sparkSession) > 0 &&
-        docs.schema("id").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        docs.count() <= math.min(
-          graft.graph.LocalSolve.threshold(df.sparkSession), 1L << 14)) {
-      return graft.graph.LocalSolve.prefixJoinLocal(docs, threshold)
-    }
     val dfreq = docs.select(explode(col("hs")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
     // per-doc (df, h)-sorted token list → keep the m − ⌈t·m⌉ + 1 prefix

@@ -63,22 +63,6 @@ object SortedNeighborhood {
       df: DataFrame, idCol: String, sortCols: Seq[String],
       window: Int): DataFrame = {
     require(window >= 2, s"window must be ≥ 2 (got $window)")
-    // below-threshold fast path (round 19, LocalSolve): sort + window
-    // pairs in one task (unsigned UTF-8 byte order = UTF8String's binary
-    // sort, id tiebreak). LIMIT-bounded gate — a production corpus never
-    // pays a counting pass.
-    locally {
-      import graft.graph.LocalSolve
-      import org.apache.spark.sql.functions.array
-      val stringKeys = sortCols.forall(c =>
-        df.schema(c).dataType == org.apache.spark.sql.types.StringType)
-      if (stringKeys && df.schema(idCol).dataType == LongType &&
-          LocalSolve.fitsBounded(df.select(col(idCol)), 1L << 20).isDefined) {
-        return LocalSolve.sortedPairsLocal(
-          df.select(col(idCol), array(sortCols.map(col): _*).as("ks")),
-          window)
-      }
-    }
     val pos = globalPositions(df, idCol, sortCols)
       .localCheckpoint(true) // probe side AND build side of the join
     val probes = pos.select(col(idCol).as("a_id"), col("pos"),

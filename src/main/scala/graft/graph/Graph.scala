@@ -56,11 +56,6 @@ object Graph {
     * materialized) edge relation — shared with [[clusteringCoefficient]]
     * so composites don't pay the canonicalize+checkpoint twice. */
   private def trianglesCanonical(e: DataFrame): DataFrame = {
-    // below-threshold fast path (round 19, LocalSolve): sorted-merge
-    // listing over greater-neighbor adjacency in one task — the same
-    // once-per-triangle bag of id-sorted triples.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
-      return LocalSolve.trianglesLocal(e)
     val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val oriented = e
@@ -99,11 +94,6 @@ object Graph {
     // ONE canonical materialization feeds both the degree table and the
     // whole triangle pipeline
     val e = canonical(edges).localCheckpoint()
-    // below-threshold fast path (round 19, LocalSolve): degrees,
-    // triangle credits and the coefficient in one task, identical
-    // 2.0·T/(deg·(deg−1)) double arithmetic.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
-      return LocalSolve.clusteringCoefLocal(e)
     val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("degree"))
     val triPerNode = trianglesCanonical(e)
@@ -152,23 +142,7 @@ object Graph {
     val both = e
       .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): the per-round
-    // fixed cost (shuffles + checkpoint + job round-trip) dominates when
-    // the edge set fits one task — run the SAME synchronous min-label
-    // fixpoint (same maxIter contract) inside one executor task. The
-    // node relation rides along because labels live on the node
-    // universe only.
-    val n0 = nodes.toDF("id").localCheckpoint(true)
-    if (LocalSolve.allLong(both, "src", "dst") &&
-        LocalSolve.allLong(n0, "id") &&
-        LocalSolve.fits(both).isDefined && LocalSolve.fits(n0).isDefined) {
-      return LocalSolve.minLabelComponents(
-        both.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-          .unionByName(n0.select(lit(2).as("t"), col("id").as("x"),
-            lit(0L).as("y"))),
-        maxIter)
-    }
-    var labels = n0.select(col("id"), col("id").as("component"))
+    var labels = nodes.toDF("id").select(col("id"), col("id").as("component"))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -345,7 +319,43 @@ object Graph {
     */
   def stronglyConnectedComponents(
       nodes: DataFrame, edges: DataFrame,
-      maxOuter: Int = 30, maxInner: Int = 100): DataFrame = {
+      maxOuter: Int = 30, maxInner: Int = 100): DataFrame =
+    fwBwRefinement(nodes, edges, maxOuter) { (closed, open, er, outer) =>
+      // below-cap fast path (LocalSolve): once the still-open subgraph
+      // fits one task, finish the refinement with one in-task Tarjan
+      // pass — the same fixpoint (F = B = SCC min id) without
+      // maxInner × maxOuter synchronization rounds. This is the FW-BW
+      // tail at ANY scale: open classes shrink monotonically, so
+      // production runs land here in late outer rounds too.
+      if (LocalSolve.allLong(er, "src", "dst") &&
+          LocalSolve.fits(er, LocalSolve.MaxEdges)) {
+        val comp = LocalSolve.tarjanComponents(er)
+          .select(col("id").as("cid"), col("component"))
+        val refinedLocal = open
+          .join(comp, open("id") === col("cid"), "left")
+          .select(open("id"),
+            coalesce(col("component"), open("id")).as("f"),
+            coalesce(col("component"), open("id")).as("b"))
+        (closed.unionByName(refinedLocal).localCheckpoint(true), 0L)
+      } else fwBwRound(closed, open, er, maxInner, outer)
+    }
+
+  /** [[stronglyConnectedComponents]] on distributed rounds only, without
+    * the one-task Tarjan tail — what runs while the open subgraph is
+    * above the cap. */
+  private[graft] def stronglyConnectedComponentsDistributed(
+      nodes: DataFrame, edges: DataFrame,
+      maxOuter: Int = 30, maxInner: Int = 100): DataFrame =
+    fwBwRefinement(nodes, edges, maxOuter)(fwBwRound(_, _, _, maxInner, _))
+
+  /** The FW-BW outer loop of [[stronglyConnectedComponents]]:
+    * `round(closed, open, er, outer)` refines the open classes over
+    * their same-class edges `er` and returns the next materialized
+    * partition with its open-node count. */
+  private def fwBwRefinement(
+      nodes: DataFrame, edges: DataFrame, maxOuter: Int)(
+      round: (DataFrame, DataFrame, DataFrame, Int) => (DataFrame, Long))
+      : DataFrame = {
     val e0 = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
       .distinct().localCheckpoint(true) // re-read every outer round
     // class key = (f, b); seed with one open class (f ≠ b marks open)
@@ -364,42 +374,32 @@ object Graph {
         .filter(col("sf") === col("df_") && col("sb") === col("db"))
         .select(col("src"), col("dst"))
         .localCheckpoint(true) // feeds both directions of propagation
-      // below-threshold fast path (round 19, LocalSolve): once the
-      // still-open subgraph fits one task, finish the refinement with
-      // one in-task Tarjan pass — the same fixpoint (F = B = SCC min
-      // id) without maxInner × maxOuter synchronization rounds. This is
-      // the FW-BW tail at ANY scale: open classes shrink monotonically,
-      // so production runs land here in late outer rounds too.
-      if (LocalSolve.allLong(er, "src", "dst") &&
-          LocalSolve.fits(er).isDefined) {
-        val comp = LocalSolve.tarjanComponents(er)
-          .select(col("id").as("cid"), col("component"))
-        val refinedLocal = open
-          .join(comp, open("id") === col("cid"), "left")
-          .select(open("id"),
-            coalesce(col("component"), open("id")).as("f"),
-            coalesce(col("component"), open("id")).as("b"))
-        part = closed.unionByName(refinedLocal).localCheckpoint(true)
-        openCnt = 0L
-      } else {
-      val obs = org.apache.spark.sql.Observation(s"scc_open_$outer")
-      val refined =
-        minLabelBothDirections(open.select(col("id")), er, maxInner)
-      val next = closed.unionByName(refined
-          .withColumn("open", when(col("f") =!= col("b"), 1L).otherwise(0L))
-          .observe(obs, sum(col("open")).as("n_open"))
-          .select(col("id"), col("f"), col("b")))
-      part = next.localCheckpoint(true)
-      // sum over zero rows observes null (empty node set) — nothing open
-      openCnt = Option(obs.get("n_open"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      }
+      val (next, n) = round(closed, open, er, outer)
+      part = next
+      openCnt = n
       outer += 1
     }
     if (openCnt != 0L) throw new IllegalStateException(
       s"SCC refinement still open after $maxOuter rounds — " +
         "raise maxOuter (rounds track FW-BW recursion depth)")
     part.select(col("id"), col("f").as("component"))
+  }
+
+  /** One distributed FW-BW round: both-direction min labels within each
+    * open class, the open-node count observed in the same job. */
+  private def fwBwRound(
+      closed: DataFrame, open: DataFrame, er: DataFrame,
+      maxInner: Int, outer: Int): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation(s"scc_open_$outer")
+    val refined =
+      minLabelBothDirections(open.select(col("id")), er, maxInner)
+    val next = closed.unionByName(refined
+        .withColumn("open", when(col("f") =!= col("b"), 1L).otherwise(0L))
+        .observe(obs, sum(col("open")).as("n_open"))
+        .select(col("id"), col("f"), col("b")))
+      .localCheckpoint(true)
+    // sum over zero rows observes null (empty node set) — nothing open
+    (next, Option(obs.get("n_open")).map(_.asInstanceOf[Long]).getOrElse(0L))
   }
 
   /** Newman modularity of a GIVEN node partition (Newman & Girvan 2004):
@@ -471,11 +471,6 @@ object Graph {
     */
   def densestSubgraphTrace(edges: DataFrame, maxRounds: Int = 6): DataFrame = {
     var e = canonical(edges).localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): the whole
-    // ≤ log₂ n-round peel trace in one task — identical integer
-    // survivor predicate and m/n division.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
-      return LocalSolve.densestTrace(e, maxRounds)
     var stats: Option[DataFrame] = None
     var r = 0
     var live = true
@@ -538,18 +533,6 @@ object Graph {
     val e = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
       .distinct().localCheckpoint(true) // re-read every half-step
     val ids = nodes.toDF("id").localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): all 2·iters
-    // half-steps in one task — identical fixed-point integer arithmetic
-    // restricted to the node universe.
-    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.allLong(ids, "id") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(ids).isDefined) {
-      return LocalSolve.hitsScores(
-        e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-          .unionByName(ids.select(lit(2).as("t"), col("id").as("x"),
-            lit(0L).as("y"))),
-        iters)
-        .select(col("id"), col("a").as("authority_fp"), col("h").as("hub_fp"))
-    }
     var st = ids.select(col("id"), lit(scale).as("a"), lit(scale).as("h"))
     for (_ <- 1 to iters) {
       def halfStep(scores: DataFrame, vCol: String, from: String, to: String) = {
@@ -597,17 +580,6 @@ object Graph {
     val e = edges.toDF("src", "dst").localCheckpoint(true)
     var dist = seeds.toDF("id").distinct()
       .select(col("id"), lit(0L).as("hops")).localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): the capped
-    // multi-source BFS in one task.
-    if (LocalSolve.allLong(e, "src", "dst") &&
-        LocalSolve.allLong(dist, "id") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(dist).isDefined) {
-      return LocalSolve.hopBfs(
-        e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-          .unionByName(dist.select(lit(1).as("t"), col("id").as("x"),
-            lit(0L).as("y"))),
-        maxHops)
-    }
     var h = 1
     var growing = true
     while (h <= maxHops && growing) {
@@ -663,28 +635,52 @@ object Graph {
     *         frontier emptying — a partial sweep misclassifies. */
   def reachability(
       seeds: DataFrame, edges: DataFrame, maxRounds: Int = 1000): DataFrame = {
-    val e = edges.toDF("src", "dst")
-    // dir=0: forward (src→dst, propagates f); dir=1: backward (dst→src,
-    // propagates b). One relation, one join per round for both sweeps.
-    val ed = e.select(col("src"), col("dst"), lit(0).as("dir"))
-      .unionAll(e.select(col("dst").as("src"), col("src").as("dst"),
-        lit(1).as("dir")))
-      .localCheckpoint(true) // re-read every round
-    var state = seeds.toDF("id").distinct()
-      .select(col("id"), lit(true).as("f"), lit(true).as("b"))
-      .localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): both BFS sweeps
-    // in one task — same round budget and non-convergence throw.
+    val (ed, state) = reachabilityInputs(seeds, edges)
+    // below-cap fast path (LocalSolve): both BFS sweeps in one task —
+    // same round budget and non-convergence throw.
     if (LocalSolve.allLong(ed, "src", "dst") &&
         LocalSolve.allLong(state, "id") &&
-        LocalSolve.fits(ed).isDefined && LocalSolve.fits(state).isDefined) {
-      return LocalSolve.reachabilityFlags(
+        LocalSolve.fits(ed, LocalSolve.MaxEdges) &&
+        LocalSolve.fits(state, LocalSolve.MaxEdges))
+      LocalSolve.reachabilityFlags(
         ed.filter(col("dir") === 0)
           .select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
           .unionByName(state.select(lit(1).as("t"), col("id").as("x"),
             lit(0L).as("y"))),
         maxRounds)
-    }
+    else reachabilityRounds(ed, state, maxRounds)
+  }
+
+  /** [[reachability]] on distributed rounds only — the loop every input
+    * above the one-task cap takes. */
+  private[graft] def reachabilityDistributed(
+      seeds: DataFrame, edges: DataFrame, maxRounds: Int = 1000): DataFrame = {
+    val (ed, state) = reachabilityInputs(seeds, edges)
+    reachabilityRounds(ed, state, maxRounds)
+  }
+
+  /** Materialized inputs of [[reachability]]: the direction-tagged edge
+    * relation (dir=0: forward, src→dst, propagates f; dir=1: backward,
+    * dst→src, propagates b — one relation, one join per round for both
+    * sweeps) and the seed flags. */
+  private def reachabilityInputs(
+      seeds: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {
+    val e = edges.toDF("src", "dst")
+    val ed = e.select(col("src"), col("dst"), lit(0).as("dir"))
+      .unionAll(e.select(col("dst").as("src"), col("src").as("dst"),
+        lit(1).as("dir")))
+      .localCheckpoint(true) // re-read every round
+    val state = seeds.toDF("id").distinct()
+      .select(col("id"), lit(true).as("f"), lit(true).as("b"))
+      .localCheckpoint(true)
+    (ed, state)
+  }
+
+  /** The distributed sweeps of [[reachability]] over its materialized
+    * inputs. */
+  private def reachabilityRounds(
+      ed: DataFrame, seedState: DataFrame, maxRounds: Int): DataFrame = {
+    var state = seedState
     var frontier = state // (id, f, b) with flags = newly set THIS round
     var r = 0
     var done = false
@@ -759,18 +755,6 @@ object Graph {
       .localCheckpoint(true)
     var dist = seeds.toDF("id").distinct()
       .select(col("id"), lit(0L).as("dist")).localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): round-synchronous
-    // Bellman–Ford in one task — identical ≤-maxRounds-edges semantics.
-    if (LocalSolve.allLong(e, "src", "dst", "w") &&
-        LocalSolve.allLong(dist, "id") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(dist).isDefined) {
-      return LocalSolve.bellmanFord(
-        e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
-            col("w"))
-          .unionByName(dist.select(lit(1).as("t"), col("id").as("x"),
-            lit(0L).as("y"), lit(0L).as("w"))),
-        maxRounds)
-    }
     // Induction: value set by a relax chain of k edges needs k strictly
     // increasing rounds (a node sits in the frontier only the round it
     // improved), so after round r every dist is a real ≤ r-edge path
@@ -829,20 +813,6 @@ object Graph {
     val e = edges.toDF("src", "dst").localCheckpoint(true)
     val n = nodes.toDF("id").localCheckpoint(true)
     val sd = seeds.toDF("id", "label").localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): all fixed
-    // rounds in one task — identical vote/tiebreak/clamp semantics.
-    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.allLong(n, "id") &&
-        LocalSolve.allLong(sd, "id", "label") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(n).isDefined &&
-        LocalSolve.fits(sd).isDefined) {
-      return LocalSolve.labelProp(
-        e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-          .unionByName(sd.select(lit(1).as("t"), col("id").as("x"),
-            col("label").as("y")))
-          .unionByName(n.select(lit(2).as("t"), col("id").as("x"),
-            lit(0L).as("y"))),
-        iters)
-    }
     var lab = sd
     for (_ <- 1 to iters) {
       val votes = e
@@ -920,16 +890,6 @@ object Graph {
       .localCheckpoint(true)
     val nSeeds = sd.count()
     require(nSeeds > 0, "no seed is a graph node — restart vector undefined")
-    // below-threshold fast path (round 19, LocalSolve): all power
-    // iterations in one task — see [[pageRank]]'s gate for the fixed
-    // accumulation order / caller-rounding rationale.
-    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(ew).isDefined)
-      return LocalSolve.pprLocal(
-        ew.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
-            col("w"))
-          .unionByName(sd.select(lit(1).as("t"), col("id").as("x"),
-            lit(0L).as("y"), lit(0.0).as("w"))),
-        nSeeds, iters, damping)
     val restart = nodes
       .join(sd.select(col("id"), lit(1).as("isSeed")),
         col("nid") === col("id"), "left")
@@ -978,10 +938,6 @@ object Graph {
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
     val e = canonical(edges).localCheckpoint()
-    // below-threshold fast path (round 19, LocalSolve): the synchronous
-    // peel in one task — identical fixpoint, maxIter contract kept.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
-      return LocalSolve.kCorePeel(e, k, maxIter)
     var live = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
       .distinct().localCheckpoint(true)
     var liveCount = live.count()
@@ -1043,23 +999,6 @@ object Graph {
   def harmonicCentrality(edges: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be ≥ 1, got $maxHops")
     val e = edges.toDF("src", "dst").localCheckpoint(true)
-    val lcm0 = (1 to maxHops).foldLeft(1L) { (a, b) =>
-      @annotation.tailrec def gcd(x: Long, y: Long): Long =
-        if (y == 0) x else gcd(y, x % y)
-      a / gcd(a, b) * b
-    }
-    // below-threshold fast path (round 19, LocalSolve): per-source
-    // capped BFS in one task. Tighter cap than the shared default: the
-    // in-task work is Σ_source |ball| — super-linear in the edge count —
-    // so one task only wins while the ball census stays small; the
-    // distributed pair-state BFS takes over beyond it.
-    if (LocalSolve.allLong(e, "src", "dst") &&
-        LocalSolve.threshold(e.sparkSession) > 0 &&
-        e.count() <= math.min(LocalSolve.threshold(e.sparkSession), 1L << 16)) {
-      return LocalSolve.harmonicSums(e, maxHops, lcm0)
-        .select(col("id"), col("reached"),
-          (col("hsum").cast("double") / lcm0).as("harmonic"))
-    }
     // diagonal start: sources are nodes with ≥ 1 out-edge (a node with
     // no out-edge reaches nobody and would contribute nothing anyway)
     var dist = e.select(col("src").as("s")).distinct()
@@ -1073,7 +1012,11 @@ object Graph {
         .groupBy(col("s"), col("v")).agg(min(col("hops")).as("hops"))
         .localCheckpoint(true)
     }
-    val lcm = lcm0
+    val lcm = (1 to maxHops).foldLeft(1L) { (a, b) =>
+      @annotation.tailrec def gcd(x: Long, y: Long): Long =
+        if (y == 0) x else gcd(y, x % y)
+      a / gcd(a, b) * b
+    }
     dist.filter(col("hops") >= 1)
       .groupBy(col("v").as("id"))
       .agg(count(lit(1)).as("reached"),
@@ -1124,18 +1067,6 @@ object Graph {
       allowTruncation: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"maxHops must be ≥ 1, got $maxHops")
     val e = edges.toDF("src", "dst").localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): all register
-    // rounds in one task — identical packed md5 registers, estimate
-    // fold, convergence rule and truncation contract. Tighter cap than
-    // the shared default: the kernel holds 2 × nodes × 1 KB of registers
-    // in one task's heap, so it engages only while that stays ≤ ~256 MB
-    // (≤ 2¹⁶ edges ⇒ ≤ 2¹⁷ endpoint nodes); production graphs take the
-    // distributed register rounds unchanged.
-    if (LocalSolve.allLong(e, "src", "dst") &&
-        LocalSolve.threshold(e.sparkSession) > 0 &&
-        e.count() <= math.min(LocalSolve.threshold(e.sparkSession), 1L << 16)) {
-      return LocalSolve.hyperBallLocal(e, maxHops, allowTruncation)
-    }
     // ball_0(v) = {v} for EVERY endpoint node — src ∪ dst, not src only
     // (the exact BFS's diagonal start). On a directed graph an in-only
     // sink has no out-edge: seeding from src alone would deny it its own
@@ -1240,6 +1171,27 @@ object Graph {
     */
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 3, s"k must be ≥ 3, got $k (k=2 truss is every edge)")
+    val e0 = canonical(edges).localCheckpoint(true)
+    // below-cap fast path (LocalSolve): support recompute + peel in one
+    // task (same vanish-at-zero-support and maxIter semantics), under
+    // the tighter k-truss cap.
+    if (LocalSolve.allLong(e0, "a", "b") &&
+        LocalSolve.fits(e0, LocalSolve.MaxTrussEdges))
+      LocalSolve.kTrussPeel(e0, k, maxIter)
+    else kTrussRounds(e0, k, maxIter)
+  }
+
+  /** [[kTruss]] on distributed rounds only — the loop every input above
+    * the one-task cap takes. */
+  private[graft] def kTrussDistributed(
+      edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
+    require(k >= 3, s"k must be ≥ 3, got $k (k=2 truss is every edge)")
+    kTrussRounds(canonical(edges).localCheckpoint(true), k, maxIter)
+  }
+
+  /** The distributed peel of [[kTruss]] over materialized canonical
+    * edges `e0`. */
+  private def kTrussRounds(e0: DataFrame, k: Int, maxIter: Int): DataFrame = {
     val thr = (k - 2).toLong
 
     // full support computation over an edge set (the seed pass, and the
@@ -1266,16 +1218,6 @@ object Graph {
       (r.getLong(0), r.getLong(1))
     }
 
-    val e0 = canonical(edges).localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): support
-    // recompute + peel in one task (same vanish-at-zero-support and
-    // maxIter semantics). Tighter cap than the shared default: the
-    // in-task support pass is O(Σ min-degree per edge), super-linear in
-    // edges, so one task only wins while the listing stays small.
-    if (LocalSolve.allLong(e0, "a", "b") &&
-        LocalSolve.threshold(e0.sparkSession) > 0 &&
-        e0.count() <= math.min(LocalSolve.threshold(e0.sparkSession), 1L << 20))
-      return LocalSolve.kTrussPeel(e0, k, maxIter)
     var live = withSupports(e0).localCheckpoint(true)
     var (liveCount, removedCount) = counts(live)
     // iter counts completed peel rounds: the loop admits rounds 1..maxIter
@@ -1382,14 +1324,34 @@ object Graph {
       checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     val ew = weightedEdges(edges)
-    // below-threshold fast path (round 19, LocalSolve): all power
-    // iterations in one task. Per-dst contributions accumulate in a
-    // FIXED (dst, src) order — within float-ulp of the distributed
-    // partial aggregation's partition-dependent order, absorbed by the
-    // r4 rounding every caller applies (the same contract the
-    // distributed path's own run-to-run variance already rides on).
-    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(ew).isDefined)
-      return LocalSolve.pageRankLocal(ew, iters, damping)
+    // below-cap fast path (LocalSolve): all power iterations in one
+    // task. Per-dst contributions accumulate in a FIXED order — within
+    // float-ulp of the distributed partial aggregation's
+    // partition-dependent order, absorbed by the r4 rounding every
+    // caller applies (the same contract the distributed path's own
+    // run-to-run variance already rides on).
+    if (LocalSolve.allLong(ew, "src", "dst") &&
+        LocalSolve.fits(ew, LocalSolve.MaxEdges))
+      LocalSolve.pageRankLocal(ew, iters, damping)
+    else pageRankRounds(ew, iters, damping, checkpointEvery)
+  }
+
+  /** [[pageRank]] on distributed rounds only — the loop every input
+    * above the one-task cap takes. */
+  private[graft] def pageRankDistributed(
+      edges: DataFrame,
+      iters: Int,
+      damping: Double = 0.85,
+      checkpointEvery: Int = 4): DataFrame = {
+    require(iters >= 1, "need at least one iteration")
+    pageRankRounds(weightedEdges(edges), iters, damping, checkpointEvery)
+  }
+
+  /** The distributed power iterations of [[pageRank]] over a
+    * [[weightedEdges]] relation. */
+  private def pageRankRounds(
+      ew: DataFrame, iters: Int, damping: Double,
+      checkpointEvery: Int): DataFrame = {
     val nodes = rankNodes(ew)
       .localCheckpoint(true) // node-count-sized; read twice per round
     val n = nodes.count() // every node has an out-edge → src carries all nodes
@@ -1460,20 +1422,6 @@ object Graph {
       .withColumn("rk", row_number().over(w))
       .withColumn("deg", count(lit(1)).over(wd)) // shares rk's shuffle
       .localCheckpoint() // reused by every hop below
-    // below-threshold fast path (round 19, LocalSolve): every hop's two
-    // equi-joins + the step union in one task — identical md5 choice
-    // lane, identical dst-sorted ranks, walks stop at dead ends alike.
-    if (LocalSolve.allLong(adj, "src", "dst") &&
-        LocalSolve.fits(adj).isDefined) {
-      val st = starts.toDF("walk_id", "node")
-      if (LocalSolve.allLong(st, "walk_id", "node")) {
-        return LocalSolve.randomWalksLocal(
-          adj.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-            .unionByName(st.select(lit(1).as("t"), col("walk_id").as("x"),
-              col("node").as("y"))),
-          steps)
-      }
-    }
     // node-keyed degree relation carved out of the SAME checkpoint (the
     // rank-1 row exists for every node with out-edges and carries deg) —
     // recomputing degrees from `edges` would re-run the caller's whole
@@ -1543,10 +1491,6 @@ object Graph {
       .select(col("src").as("node"), col("k"))
       .localCheckpoint()
     val m = e.count() / 2
-    // below-threshold fast path (round 19, LocalSolve): all sweeps in
-    // one task — identical exact-integer score and tiebreak.
-    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.fits(e).isDefined)
-      return LocalSolve.louvainSweeps(e, m, rounds)
     var a = deg.select(col("node"), col("node").as("cid"))
     for (_ <- 1 to rounds)
       a = louvainSweep(e, deg, m, a)
@@ -1632,23 +1576,6 @@ object Graph {
       .groupBy(col("src")).agg(sort_array(collect_list(col("dst"))).as("nb"))
       .select(col("src").as("node"), col("nb"))
       .localCheckpoint()
-    // below-threshold fast path (round 19, LocalSolve): all hops in one
-    // task — identical md5₆₀ inverse-CDF picks and IEEE fold order. The
-    // gate sums neighbor-array sizes (= edge count) over the checkpoint;
-    // the kernel re-derives the edge list by exploding the SAME
-    // checkpointed arrays (a scan, no second upstream pass).
-    if (LocalSolve.allLong(starts.toDF("walk_id", "node"), "walk_id", "node") &&
-        nbrs.schema("node").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        LocalSolve.fitsSum(nbrs, size(col("nb")).cast("long")).isDefined) {
-      return LocalSolve.node2vecLocal(
-        nbrs.select(lit(0).as("t"), col("node").as("x"),
-            explode(col("nb")).as("y"))
-          .unionByName(starts.toDF("walk_id", "node")
-            .select(lit(1).as("t"), col("walk_id").as("x"),
-              col("node").as("y"))),
-        steps, p, q)
-    }
     val s0 = starts.toDF("walk_id", "node")
     var out = s0.select(col("walk_id"), lit(0L).as("step"), col("node"))
     val pick1 = conv(substring(md5(concat_ws(":",
@@ -1735,16 +1662,6 @@ object Graph {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val und = undirected(edges).localCheckpoint(true)
     val all = nodes.toDF("id").distinct().localCheckpoint(true)
-    // below-threshold fast path (round 19, LocalSolve): all Luby rounds
-    // in one task — identical md5 priorities, win rule and round budget.
-    if (LocalSolve.allLong(und, "src", "dst") && LocalSolve.allLong(all, "id") &&
-        LocalSolve.fits(und).isDefined && LocalSolve.fits(all).isDefined) {
-      return LocalSolve.lubyMisLocal(
-        und.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-          .unionByName(all.select(lit(2).as("t"), col("id").as("x"),
-            lit(0L).as("y"))),
-        maxRounds)
-    }
     var active = all
     var selected: DataFrame = null
     var r = 1

@@ -108,7 +108,6 @@ object SuffixArrays {
       df: DataFrame, idCol: String, textCol: String, cap: Int): DataFrame = {
     require(cap >= 1, s"cap must be ≥ 1, got $cap")
     val spark = df.sparkSession
-    import spark.implicits._
     val docs = df
       .select(col(idCol).as("id"), substring(col(textCol), 1, cap).as("t"))
       .filter(length(col("t")) >= 1)
@@ -138,67 +137,6 @@ object SuffixArrays {
           StructField("id", LongType, nullable = false),
           StructField("pos", LongType, nullable = false),
           StructField("gsa_rank", LongType, nullable = false))))
-    // below-threshold fast path (round 19): the whole prefix-doubling
-    // fixpoint equals "order by (seed-ranked suffix with end sentinel
-    // below every rank, id, pos)" — when the character relation fits one
-    // task (`spark.graft.suffix.localSolveChars`, default 4 194 304;
-    // 0 disables), compute that order directly inside ONE mapPartitions
-    // task instead of log₂(cap) rounds × (window shuffle + range
-    // exchange + count collect + assign pass). Seed ranks come from the
-    // SAME driver-sorted alphabet, so the comparator is bit-identical to
-    // the distributed rounds for any input.
-    val localThr = spark.conf
-      .getOption("spark.graft.suffix.localSolveChars")
-      .map(_.toLong).getOrElse(1L << 22)
-    if (localThr > 0 && chars.count() <= localThr) {
-      val alphaMap = alphabet.toMap
-      val ranked = chars
-        .select(col("id"), col("pos"), col("ch"))
-        .as[(Long, Long, String)]
-        .coalesce(1)
-        .mapPartitions { it =>
-          val rows = it.toArray
-          // per-doc seed-rank arrays (positions are 1-based, contiguous)
-          val docs = new scala.collection.mutable.LongMap[
-            scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-          rows.foreach { case (id, pos, ch) =>
-            docs.getOrElseUpdate(id,
-              new scala.collection.mutable.ArrayBuffer[(Long, Long)]()) +=
-              ((pos, alphaMap(ch)))
-          }
-          val byDoc = new scala.collection.mutable.LongMap[Array[Long]]()
-          docs.foreachEntry { (id, buf) =>
-            val arr = new Array[Long](buf.length)
-            buf.foreach { case (pos, r) => arr(pos.toInt - 1) = r }
-            byDoc(id) = arr
-          }
-          val sufs = rows.map { case (id, pos, _) => (id, pos) }
-          java.util.Arrays.sort(sufs, new java.util.Comparator[(Long, Long)] {
-            def compare(a: (Long, Long), b: (Long, Long)): Int = {
-              val ta = byDoc(a._1); val tb = byDoc(b._1)
-              var i = a._2.toInt - 1
-              var j = b._2.toInt - 1
-              while (i < ta.length && j < tb.length) {
-                val c = java.lang.Long.compare(ta(i), tb(j))
-                if (c != 0) return c
-                i += 1; j += 1
-              }
-              // end sentinel ranks below every real rank
-              val c = java.lang.Integer.compare(
-                if (i < ta.length) 1 else 0, if (j < tb.length) 1 else 0)
-              if (c != 0) return c
-              val ci = java.lang.Long.compare(a._1, b._1)
-              if (ci != 0) ci else java.lang.Long.compare(a._2, b._2)
-            }
-          })
-          sufs.iterator.zipWithIndex.map { case ((id, pos), i) =>
-            (id, pos, (i + 1).toLong)
-          }
-        }
-        .toDF("id", "pos", "gsa_rank")
-        .localCheckpoint(true) // eager: single kernel run for any fan-out
-      return ranked
-    }
     val alphaDf = spark.createDataFrame(alphabet).toDF("ch", "cr")
     var cur = chars.join(broadcast(alphaDf), "ch")
       .select(col("id"), col("pos"), col("cr").as("r"))

@@ -267,58 +267,14 @@ object Ann {
     * the one shuffle carries ≤ k rows per probe per partition, never the
     * |probes|×|corpus| pair relation. The right 100 TB plan for probe sets
     * that fit a broadcast (≲10⁵ vectors); beyond that use [[knnJoinIvf]].
-    * Self-pairs (same id both sides) are excluded. Ties → smaller id.
-    *
-    * `localSolve = true` (round 19) additionally gates a below-threshold
-    * one-task kernel with bit-identical results. It is OPT-IN because the
-    * gate + eager kernel materialization cost ~3 extra jobs per call:
-    * a win when the result feeds a long per-query pipeline (mutual-kNN →
-    * SAGE, the NN-Descent exact reference), a measured regression for
-    * evaluators that call this several times per query and otherwise
-    * defer everything into one lazy plan (q_mrl_recall read 1.44 s
-    * gated-on vs 0.51 s off on the same build). */
+    * Self-pairs (same id both sides) are excluded. Ties → smaller id. */
   def knnJoinExact(
       probes: DataFrame,
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      localSolve: Boolean = false): DataFrame = {
+      k: Int): DataFrame = {
     import graft.plans.TopKByScore.topkByScore
-    // below-threshold fast path (round 19, LocalSolve): both sides small
-    // → all pair cosines + the per-probe k-heap in one task, identical
-    // index-ordered fold, (cos DESC, id ASC) order and HALF_UP rounding.
-    // The corpus gate is a LIMIT-bounded count (≤ cap+1 rows scanned), so
-    // a production-sized corpus never pays a counting pass.
-    if (localSolve &&
-        // long ids only (the sibling-gate convention): a non-long id
-        // must fall through to the type-generic distributed join, not
-        // crash the kernel decode or silently widen the output schema
-        probes.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-        corpus.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType) {
-      import graft.graph.LocalSolve
-      val cap = 1L << 18 // pair volume |p|·|c| is the kernel's work
-      val cs = corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      val ps = probes.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      // gate counts ride a 1-column projection — limit's single-partition
-      // gather must not carry the vectors
-      (LocalSolve.fitsBounded(cs.select(col("id")), cap),
-        LocalSolve.fitsBounded(ps.select(col("id")), cap)) match {
-        case (Some(nc), Some(np)) if nc * np <= (1L << 23) =>
-          return LocalSolve.knnTopkLocal(
-            cs.select(org.apache.spark.sql.functions.lit(0).as("t"),
-                col("id"), col("v"))
-              .unionByName(ps.select(
-                org.apache.spark.sql.functions.lit(1).as("t"),
-                col("id"), col("v"))),
-            k)
-        case _ => ()
-      }
-    }
     val p = broadcast(
       probes.select(col(idCol).as("probe_id"), col(vecCol).as("pv")))
     // The |corpus|×|probes| pair work rides the CORPUS side's partitioning,
@@ -500,35 +456,6 @@ object Ann {
     val v = df.select(col(idCol).as("id"),
       col(vecCol).as("vec")).localCheckpoint(true)
 
-    // below-threshold fast path (round 19, LocalSolve): seed assignment,
-    // ring, and every local-join round in one task — identical centroid
-    // rule, md5 ring order, cosine folds and (cos DESC, dst ASC) top-k.
-    // Gate on the SEED pair volume n²/nlist (the kernel's dominant term;
-    // a small PINNED nlist makes it quadratic — measured at sf1: the
-    // n=4 000/nlist=8 form read 19.1 s one-task vs 15.4 s distributed,
-    // while the auto-⌈√n⌉ form read 2.3 s vs 21.0 s) plus an absolute
-    // vector cap; rounds-work is O(n·(2k)²), dominated by the seed term.
-    locally {
-      import graft.graph.LocalSolve
-      if (LocalSolve.threshold(v.sparkSession) > 0 &&
-          v.schema("id").dataType == org.apache.spark.sql.types.LongType) {
-        val n = v.count()
-        val kk0 =
-          if (nlist > 0) nlist
-          else math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-        if (n <= math.min(LocalSolve.threshold(v.sparkSession), 1L << 13) &&
-            n.toDouble * n / kk0 <= (1L << 19).toDouble) {
-          val out = LocalSolve.nnDescentLocal(
-            v.select(col("id"), col("vec").cast("array<double>").as("vec")),
-            k, rounds, nlist, ringNeighbors)
-          return (0 to rounds).map { r =>
-            out.filter(col("round") === r.toLong)
-              .select(col("src"), col("dst"), col("cos"), col("rk"))
-          }
-        }
-      }
-    }
-
     def topkGraph(pairs: DataFrame): DataFrame =
       pairs.groupBy(col("src"))
         .agg(topkByScore(col("cos"), col("dst"), k).as("top"))
@@ -613,20 +540,6 @@ object Ann {
     val p = pool
       .select(col(idCol).as("id"), col(vecCol).as("vec"), col(relCol).as("rel"))
       .localCheckpoint(true) // shortlist: read by sims and every step
-    // below-threshold fast path (round 19, LocalSolve): the whole greedy
-    // recurrence in one task — k orderBy-limit(1) jobs collapse to one.
-    // Shortlists are display-page-sized by contract; the cap guards the
-    // |pool|² sims matrix. Long ids + double rel only, so the gated
-    // output's schema AND values match the distributed path exactly.
-    if (graft.graph.LocalSolve.threshold(p.sparkSession) > 0 &&
-        p.schema("id").dataType == org.apache.spark.sql.types.LongType &&
-        p.schema("rel").dataType == org.apache.spark.sql.types.DoubleType &&
-        p.count() <= math.min(
-          graft.graph.LocalSolve.threshold(p.sparkSession), 1L << 12)) {
-      return graft.graph.LocalSolve.mmrLocal(
-        p.select(col("id"), col("vec").cast("array<double>").as("vec"),
-          col("rel")), k, lam, mu)
-    }
     val sims = p.as("x").join(p.as("y"), col("x.id") =!= col("y.id"))
       .select(col("x.id").as("xi"), col("y.id").as("yi"),
         vecCosine(col("x.vec"), col("y.vec")).as("sim"))
@@ -761,8 +674,7 @@ object Ann {
   }
 
   def mutualKnn(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val knn = knnJoinExact(df, df, idCol, vecCol, k, localSolve = true)
-      .localCheckpoint(true)
+    val knn = knnJoinExact(df, df, idCol, vecCol, k).localCheckpoint(true)
     knn.as("r1").join(knn.as("r2"),
         col("r1.probe_id") === col("r2.id")
           && col("r1.id") === col("r2.probe_id")

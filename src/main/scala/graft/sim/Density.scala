@@ -52,18 +52,6 @@ object Density {
       .withColumn("cy", floor(col("y") / eps).cast("long"))
       .localCheckpoint(true) // probe side, build side, noise remainder
 
-    // below-threshold fast path (round 19, LocalSolve): the whole
-    // pipeline — 9-cell probe pairs, core cut, core-core min-label CC
-    // (same maxIter budget), border attachment, noise remainder — in one
-    // task with bit-identical arithmetic. Work is the candidate-pair
-    // volume, bounded by the same density assumption the distributed
-    // probe rides on, so the gate is the point count.
-    if (graft.graph.LocalSolve.threshold(p.sparkSession) > 0 &&
-        p.count() <= math.min(
-          graft.graph.LocalSolve.threshold(p.sparkSession), 1L << 20)) {
-      return graft.graph.LocalSolve.dbscanLocal(p, eps, minPts, maxIter)
-    }
-
     // each point probes its own cell and the 8 adjacent ones
     val offsets = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
       struct(lit(dx.toLong).as("dx"), lit(dy.toLong).as("dy"))): _*)

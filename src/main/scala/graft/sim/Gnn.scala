@@ -61,35 +61,6 @@ object Gnn {
       idCol: String,
       vecCol: String): DataFrame = {
     val e = edges.toDF("src", "dst")
-    // below-threshold fast path (round 19, LocalSolve): fixed-point
-    // quantize, integer neighbor sums and the index-ordered norm fold in
-    // one task — LIMIT-bounded gates, so production relations never pay
-    // a counting pass.
-    locally {
-      import graft.graph.LocalSolve
-      import org.apache.spark.sql.functions.lit
-      val longIds =
-        nodes.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
-        LocalSolve.allLong(e, "src", "dst")
-      val cap = 1L << 20
-      val ns = nodes.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      // node gate FIRST: the node relation is a cheap scan for every
-      // caller, while the edge relation can be an un-materialized join —
-      // its LIMIT-bounded count only runs once the node universe is
-      // already known to be kernel-sized (edges ∝ nodes·k in the SAGE
-      // composites, so a huge-corpus call exits on the node check
-      // without touching the edge plan)
-      if (longIds && LocalSolve.fitsBounded(ns.select(col("id")), cap).isDefined
-          && LocalSolve.fitsBounded(e, cap).isDefined) {
-        return LocalSolve.sageMeanLocal(
-          e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
-              lit(null).cast("array<double>").as("v"))
-            .unionByName(ns.select(lit(1).as("t"), col("id").as("x"),
-              lit(0L).as("y"), col("v"))))
-          .withColumnRenamed("id", idCol)
-      }
-    }
     val qn = nodes.select(col(idCol),
       transform(col(vecCol),
         x => floor(x.cast("double") * 1e6 + 0.5).cast("long")).as("__q"))

@@ -2,28 +2,20 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Round-19 optimization: the below-threshold one-task solvers
-  * (graph/LocalSolve.scala) must return BIT-IDENTICAL results to the
-  * distributed fixpoint loops they shortcut. Every algorithm runs twice
-  * on the same graph — once with the local path enabled (tiny test
-  * graphs are always under the default threshold) and once with
-  * `spark.graft.graph.localSolveEdges = 0` (distributed loops) — and
-  * the outputs are compared as sets of rows.
+/** The below-cap one-task solvers (graph/LocalSolve.scala) must return
+  * BIT-IDENTICAL results to the distributed fixpoint loops they
+  * shortcut. Every kernel runs twice on the same graph — once through
+  * the public method (tiny test graphs are always under the cap) and
+  * once through its `*Distributed` loop — and the outputs are compared
+  * as sets of rows.
   */
 class LocalSolveSpec extends SparkSpec {
 
   import spark.implicits._
+  import graft.graph.Graph
 
-  private def bothPaths(fn: => DataFrame): (Set[String], Set[String]) = {
-    val key = "spark.graft.graph.localSolveEdges"
-    spark.conf.unset(key) // default: local path on
-    val local = fn.collect().map(_.toString).toSet
-    spark.conf.set(key, "0")
-    try {
-      val dist = fn.collect().map(_.toString).toSet
-      (local, dist)
-    } finally spark.conf.unset(key)
-  }
+  private def rows(df: DataFrame): Set[String] =
+    df.collect().map(_.toString).toSet
 
   // a directed graph with a nested SCC structure, dangling periphery,
   // parallel shortcuts and an isolated node — exercises every branch
@@ -38,122 +30,24 @@ class LocalSolveSpec extends SparkSpec {
 
   private def nodes = (1L to 11L).toDF("id") // 11 is isolated
 
-  test("connectedComponents: local == distributed") {
-    val (l, d) = bothPaths(
-      graft.graph.Graph.connectedComponents(nodes, edges))
-    assert(l == d && l.nonEmpty)
-  }
-
   test("stronglyConnectedComponents: local == distributed") {
-    val (l, d) = bothPaths(
-      graft.graph.Graph.stronglyConnectedComponents(nodes, edges))
+    val l = rows(Graph.stronglyConnectedComponents(nodes, edges))
+    val d = rows(Graph.stronglyConnectedComponentsDistributed(nodes, edges))
     assert(l == d && l.nonEmpty)
   }
 
   test("reachability: local == distributed") {
-    val (l, d) = bothPaths(
-      graft.graph.Graph.reachability(Seq(3L, 9L).toDF("id"), edges))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("hopDistance: local == distributed (cap respected)") {
-    val (l, d) = bothPaths(
-      graft.graph.Graph.hopDistance(Seq(1L, 9L).toDF("id"), edges, maxHops = 2))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("shortestPaths: local == distributed (round cap respected)") {
-    val w = edges.select($"src", $"dst",
-      (($"src" * 7 + $"dst") % 5 + 1).as("w"))
-    val (l, d) = bothPaths(
-      graft.graph.Graph.shortestPaths(Seq(1L).toDF("id"), w, maxRounds = 3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("kCore: local == distributed") {
-    // undirected clique + pendant chain
-    val und = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (3L, 4L), (4L, 5L), (5L, 6L))).toDF("src", "dst")
-    val (l, d) = bothPaths(graft.graph.Graph.kCore(und, k = 3))
+    val seeds = Seq(3L, 9L).toDF("id")
+    val l = rows(Graph.reachability(seeds, edges))
+    val d = rows(Graph.reachabilityDistributed(seeds, edges))
     assert(l == d && l.nonEmpty)
   }
 
   test("kTruss: local == distributed (supports included)") {
     val und = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (2L, 5L), (3L, 5L), (4L, 5L), (5L, 6L)).toDF("src", "dst")
-    val (l, d) = bothPaths(graft.graph.Graph.kTruss(und, k = 4))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("densestSubgraphTrace: local == distributed (trace rows)") {
-    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L),
-      (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L)).toDF("src", "dst")
-    val (l, d) = bothPaths(graft.graph.Graph.densestSubgraphTrace(und))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("hits: local == distributed (fixed point, node universe)") {
-    val (l, d) = bothPaths(graft.graph.Graph.hits(nodes, edges, iters = 3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("labelPropagate: local == distributed (clamp + tiebreak)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val seeds = Seq((1L, 100L), (7L, 200L)).toDF("id", "label")
-    val (l, d) = bothPaths(
-      graft.graph.Graph.labelPropagate(nodes, seeds, und, iters = 3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("lubyMis: local == distributed (md5 priorities)") {
-    val (l, d) = bothPaths(
-      graft.graph.Graph.lubyMis(nodes, edges, maxRounds = 16))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("louvain: local == distributed (integer scores)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val (l, d) = bothPaths(graft.graph.Graph.louvain(und, rounds = 2))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("harmonicCentrality: local == distributed (exact longs)") {
-    val (l, d) = bothPaths(
-      graft.graph.Graph.harmonicCentrality(
-        graft.graph.Graph.undirected(edges), maxHops = 3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("incrementalComponents: local == distributed (condensation fold)") {
-    val lab = graft.graph.Graph.connectedComponents(nodes, edges)
-    val (l, d) = bothPaths(
-      graft.graph.Graph.incrementalComponents(
-        lab, Seq(12L).toDF("id"), Seq((7L, 9L), (12L, 11L)).toDF("src", "dst")))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("randomWalks: local == distributed (md5 picks, dead-end stop)") {
-    // include a dead end (7 has no out-edge in `edges`) so the stop
-    // semantics are exercised
-    val starts = Seq((1L, 1L), (2L, 9L), (3L, 6L)).toDF("walk_id", "node")
-    val (l, d) = bothPaths(
-      graft.graph.Graph.randomWalks(edges, starts, steps = 4))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("node2vecWalks: local == distributed (inverse-CDF picks)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val starts = Seq((1L, 1L), (2L, 9L), (3L, 5L)).toDF("walk_id", "node")
-    val (l, d) = bothPaths(
-      graft.graph.Graph.node2vecWalks(und, starts, steps = 4,
-        p = 4.0, q = 0.25))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("harmonicCentralityHyperBall: local == distributed (registers)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val (l, d) = bothPaths(
-      graft.graph.Graph.harmonicCentralityHyperBall(und, maxHops = 12))
+    val l = rows(Graph.kTruss(und, k = 4))
+    val d = rows(Graph.kTrussDistributed(und, k = 4))
     assert(l == d && l.nonEmpty)
   }
 
@@ -161,188 +55,34 @@ class LocalSolveSpec extends SparkSpec {
     // raw pr carries float-ulp sum-order differences BETWEEN ANY TWO
     // runs of the distributed path itself (partial-agg order); compare
     // after the rounding every registry caller applies
-    val und = graft.graph.Graph.undirected(edges)
-    val rounded = (df: DataFrame) => df.select($"id",
-      org.apache.spark.sql.functions.round($"pr" * 1000, 4).as("prx"))
-    val (l, d) = bothPaths(rounded(graft.graph.Graph.pageRank(und, iters = 3)))
+    val und = Graph.undirected(edges)
+    val rounded = (df: DataFrame) => rows(df.select($"id",
+      org.apache.spark.sql.functions.round($"pr" * 1000, 4).as("prx")))
+    val l = rounded(Graph.pageRank(und, iters = 3))
+    val d = rounded(Graph.pageRankDistributed(und, iters = 3))
     assert(l == d && l.nonEmpty)
   }
 
-  test("personalizedPageRank: local == distributed (r4-rounded)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val rounded = (df: DataFrame) => df.select($"id",
-      org.apache.spark.sql.functions.round($"pr" * 1000, 4).as("prx"))
-    val (l, d) = bothPaths(rounded(
-      graft.graph.Graph.personalizedPageRank(und, Seq(1L, 9L).toDF("id"),
-        iters = 3)))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("triangles: local == distributed (once-per-triangle bag)") {
-    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (4L, 5L), (5L, 6L), (4L, 6L), (5L, 7L)).toDF("src", "dst")
-    val (l, d) = bothPaths(graft.graph.Graph.triangles(und))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("clusteringCoefficient: local == distributed (coef doubles)") {
-    val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (4L, 5L), (5L, 6L), (4L, 6L), (5L, 7L)).toDF("src", "dst")
-    val (l, d) = bothPaths(graft.graph.Graph.clusteringCoefficient(und))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("linkPredictLocal == the distributed wedge pipeline") {
-    import org.apache.spark.sql.functions._
-    // canonical edges with a 4-clique missing one edge → a (cn ≥ 2)
-    // candidate; threshold 2 keeps the tiny fixture productive
-    val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (2L, 5L), (3L, 5L), (4L, 5L), (5L, 6L), (1L, 6L), (3L, 6L))
-      .toDF("a", "b").localCheckpoint()
-    val local = graft.graph.LocalSolve.linkPredictLocal(e, minCn = 2L)
-      .collect().map(_.toString).toSet
-    val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = und.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-    val wedge = und.as("u1")
-      .join(und.as("u2"), col("u1.a") === col("u2.a") && col("u1.b") < col("u2.b"))
-      .groupBy(col("u1.b").as("x"), col("u2.b").as("y"))
-      .agg(count(lit(1)).as("cn"))
-    val dist = wedge
-      .join(e, col("x") === col("a") && col("y") === col("b"), "left_anti")
-      .filter(col("cn") >= 2)
-      .join(deg.select(col("n").as("x"), col("d").as("dx")), "x")
-      .join(deg.select(col("n").as("y"), col("d").as("dy")), "y")
-      .select(col("x"), col("y"), col("cn"),
-        (floor(col("cn").cast("double")
-          / (col("dx") + col("dy") - col("cn")).cast("double") * 10000
-          + lit(0.5)) / 10000).as("jaccard"))
-      .collect().map(_.toString).toSet
-    assert(local == dist && local.nonEmpty)
-  }
-
-  test("sortedNeighborhood candidatePairs: local == distributed (utf8 order)") {
-    // non-ASCII keys: UTF8String binary order ≠ Java UTF-16 order for
-    // supplementary chars — the kernel must sort by UTF-8 bytes
-    val docs = Seq((1L, "alpha"), (2L, "Beta"), (3L, "beta"), (4L, "béta"),
-      (5L, "😀 emoji"), (6L, "� repl"), (7L, "alpha"),
-      (8L, "zz")).toDF("k", "key")
-    val (l, d) = bothPaths(
-      graft.dedup.SortedNeighborhood.candidatePairs(docs, "k", Seq("key"),
-        window = 3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("nnDescent: local == distributed (seed, ring, rounds, topk)") {
-    val vecs = (1L to 20L).map { i =>
-      (i, Array.tabulate(8)(j => math.sin(i * 17 + j * 5) + 0.05 * j))
-    }.toDF("id", "v")
-    def run() = graft.sim.Ann.nnDescent(vecs, "id", "v",
-      k = 3, rounds = 2, nlist = 4)
-      .zipWithIndex.map { case (g, r) =>
-        g.withColumn("round", org.apache.spark.sql.functions.lit(r.toLong))
-      }.reduce(_ unionByName _)
-    val (l, d) = bothPaths(run())
-    assert(l == d && l.nonEmpty)
-    // and the auto-sized (nlist = 0) path
-    def runAuto() = graft.sim.Ann.nnDescent(vecs, "id", "v",
-      k = 3, rounds = 1, nlist = 0).last
-    val (la, da) = bothPaths(runAuto())
-    assert(la == da && la.nonEmpty)
-  }
-
-  test("mmrRerank: local == distributed (greedy argmax, ties)") {
-    val pool = (1L to 9L).map { i =>
-      (i, Array.tabulate(6)(j => math.sin(i * 3 + j)), 1.0 / i)
-    }.toDF("id", "vec", "rel")
-    val (l, d) = bothPaths(
-      graft.sim.Ann.mmrRerank(pool, "id", "vec", "rel", k = 4,
-        lam = 0.7, mu = 0.3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("prefixFilterJoin: local == distributed (lossless prefix, exact J)") {
-    val docs = Seq(
-      (1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w"),
-      (4L, "x y z w v"), (5L, "q r s"), (6L, "a b c d e f"),
-      (7L, "  a   b  "), (8L, "")).toDF("doc_id", "text")
-    val (l, d) = bothPaths(
-      graft.dedup.Dedup.prefixFilterJoin(docs, "doc_id", "text", 0.5))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("knnJoinExact + mutualKnn: local == distributed (cos folds, ties)") {
-    val vecs = (1L to 12L).map { i =>
-      (i, Array.tabulate(8)(j => math.sin(i * 31 + j * 7) + 0.1 * j))
-    }.toDF("id", "v")
-    val (l, d) = bothPaths(
-      graft.sim.Ann.knnJoinExact(vecs, vecs, "id", "v", 3,
-        localSolve = true))
-    assert(l == d && l.nonEmpty)
-    val (lm, dm) = bothPaths(graft.sim.Ann.mutualKnn(vecs, "id", "v", 3))
-    assert(lm == dm && lm.nonEmpty)
-  }
-
-  test("knnJoinExact: NaN cosines (zero vector) and duplicate probe ids") {
-    // a zero vector makes every cosine against it NaN — the kernel must
-    // replicate TopKByScore's total order (NaN retained as greatest,
-    // displayed last); duplicate probe rows must merge into ONE group
-    val corpus = ((1L to 6L).map { i =>
-      (i, Array.tabulate(4)(j => math.cos(i * 7 + j)))
-    } :+ (9L, Array.fill(4)(0.0))).toDF("id", "v")
-    val probes = Seq(
-      (1L, Array.tabulate(4)(j => math.cos(7 + j))),
-      (1L, Array.tabulate(4)(j => math.cos(14 + j))), // duplicate id
-      (9L, Array.fill(4)(0.0))) // zero-vector probe: all-NaN scores
-      .toDF("id", "v")
-    val (l, d) = bothPaths(
-      graft.sim.Ann.knnJoinExact(probes, corpus, "id", "v", 3,
-        localSolve = true))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("sageMeanLayer: local == distributed (fixed-point + norm fold)") {
-    val vecs = (1L to 8L).map { i =>
-      (i, Array.tabulate(6)(j => math.cos(i * 13 + j) * 0.8))
-    }.toDF("id", "v")
-    val es = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (4L, 5L), (5L, 4L),
-      (6L, 1L)).toDF("src", "dst")
-    val (l, d) = bothPaths(
-      graft.sim.Gnn.sageMeanLayer(vecs, es, "id", "v"))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("dbscan: local == distributed (roles, clusters, noise)") {
-    // two dense blobs + stragglers; eps/coords exact in binary
-    val pts = (Seq((1L, 0.0, 0.0), (2L, 0.25, 0.0), (3L, 0.0, 0.25),
-      (4L, 0.25, 0.25), (5L, 0.5, 0.0), (6L, 10.0, 10.0), (7L, 10.25, 10.0),
-      (8L, 10.0, 10.25), (9L, 10.25, 10.25), (10L, 10.5, 10.5),
-      (11L, 50.0, 50.0), (12L, 0.75, 0.75)))
-      .toDF("id", "x", "y")
-    val (l, d) = bothPaths(
-      graft.sim.Density.dbscan(pts, "id", "x", "y", eps = 0.75, minPts = 4))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("hyperBall truncation contract throws on the local path too") {
-    spark.conf.unset("spark.graft.graph.localSolveEdges")
+  test("hyperBall truncation contract throws") {
     val path = (1L to 6L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
-      graft.graph.Graph.harmonicCentralityHyperBall(path, maxHops = 2)
+      Graph.harmonicCentralityHyperBall(path, maxHops = 2)
     }
   }
 
-  test("budget contracts still throw at call time on the local path") {
-    spark.conf.unset("spark.graft.graph.localSolveEdges")
+  test("budget contracts throw at call time on both paths") {
     val path = (1L to 6L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
-      graft.graph.Graph.connectedComponents((1L to 7L).toDF("id"), path,
-        maxIter = 2)
+      Graph.connectedComponents((1L to 7L).toDF("id"), path, maxIter = 2)
     }
     intercept[IllegalStateException] {
-      graft.graph.Graph.reachability(Seq(1L).toDF("id"), path, maxRounds = 1)
+      Graph.reachability(Seq(1L).toDF("id"), path, maxRounds = 1)
+    }
+    intercept[IllegalStateException] {
+      Graph.reachabilityDistributed(Seq(1L).toDF("id"), path, maxRounds = 1)
     }
     intercept[IllegalArgumentException] {
-      graft.graph.Graph.lubyMis((1L to 3L).toDF("id"),
+      Graph.lubyMis((1L to 3L).toDF("id"),
         Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), maxRounds = 0)
     }
   }

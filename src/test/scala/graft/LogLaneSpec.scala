@@ -1,10 +1,11 @@
 package graft
 
-/** Pins the JVM log lane the HyperBall local kernel must use: Spark's
-  * `log` expression vs StrictMath.log vs Math.log over every argument
-  * the 256-register linear-counting branch can produce (256.0/zeros,
-  * zeros ∈ 1..255). If this ever fails, LocalSolve.hyperBallLocal's
-  * `estimate` must switch lanes to stay bit-identical. */
+/** Pins the JVM log lane that matches Spark's `log` expression:
+  * Spark's `log` vs StrictMath.log vs Math.log over every argument the
+  * 256-register linear-counting branch of HyperBall's estimate can
+  * produce (256.0/zeros, zeros ∈ 1..255). Any JVM-side copy of that
+  * estimate must use the lane this spec pins to stay bit-identical to
+  * the distributed register rounds. */
 class LogLaneSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.functions._
@@ -15,7 +16,7 @@ class LogLaneSpec extends SparkSpec {
     val strict = args.map(StrictMath.log)
     val mathL = args.map(math.log)
     assert(sparkLog.toSeq == strict.toSeq,
-      "Spark log diverges from StrictMath.log — hyperBallLocal must change lanes")
+      "Spark log diverges from StrictMath.log — a JVM-side estimate must change lanes")
     // informational: whether Math.log happens to agree on this JVM
     info(s"Math.log agrees with Spark on all 255 args: ${sparkLog.toSeq == mathL.toSeq}")
   }

@@ -4,6 +4,7 @@ given SF, then run each oracle SQL in DuckDB over the same parquet tables
 and compare (columns sorted by name, rows sorted, floats rounded)."""
 import json, math, sys, subprocess, glob, os
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 else "0.01"
 OUT = f"/tmp/graft_verify_sf{SF}"
 SFDIR = f"/root/testdata/sf{SF}"
@@ -15,7 +16,7 @@ only = [a for a in sys.argv[2:] if not a.startswith("--")]
 if run_verify:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SFDIR} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=ROOT)
     err_lines = [l for l in (r.stdout + r.stderr).splitlines()
                  if "[verify]" in l or "[error]" in l]
     for l in err_lines[:40]:
