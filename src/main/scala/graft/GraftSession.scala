@@ -39,6 +39,17 @@ object GraftSession {
       // A session can still override it per workload.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 20).toString)
+      // Generated-class cache (static: fixed for the JVM when the first
+      // session builds). A channel re-runs the same plan shapes, but one
+      // pass of a multi-query workload generates more classes than the
+      // 100-entry default holds, so the LRU evicts each class before its
+      // next use and every pass recompiles all of them: perfbench
+      // curation_small generates 172 per pass (q_bowtie alone 84). 1024
+      // is about 6x that working set. It stays bounded because streaming
+      // micro-batches inline per-batch literals and generate new classes
+      // every batch (stream.sessionize: 18 per pass), which an unbounded
+      // cache would keep for a pipeline's whole life.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.ui.enabled", "false")
 
   /** RocksDB state store provider — the production state backend for the

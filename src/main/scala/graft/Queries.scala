@@ -4685,8 +4685,11 @@ object Queries {
     },
     qSccOracleSql)
 
-  /** The part-transition graph shared by q_scc / q_luby_mis: per-customer
-    * purchase sequences over the %20-part, %4-customer slice. */
+  /** The part-transition graph shared by q_scc, q_luby_mis, q_bowtie
+    * and q_hits: per-customer purchase sequences over the %20-part,
+    * %4-customer slice, as (nodes, edges). The (customer, part) relation
+    * both sides derive from is materialized once, so its scan, join and
+    * aggregate run one time, not once per side. */
   private def partTransitionGraph(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
       val t = Tables(s, dir)
@@ -4695,6 +4698,7 @@ object Queries {
         .filter(col("o_custkey") % 4 === 0)
         .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .agg(min(col("o_orderdate")).as("d0"))
+        .localCheckpoint(true)
       // per-customer purchase sequence: bounded partitions (one
       // customer's filtered parts), so the window never concentrates
       val w = org.apache.spark.sql.expressions.Window
@@ -4813,20 +4817,9 @@ object Queries {
   val qBowtie = Q(
     "q_bowtie",
     (s, dir) => {
-      val t = Tables(s, dir)
-      val fp = t.lineitem.filter(col("l_partkey") % 20 === 0)
-        .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("o_custkey") % 4 === 0)
-        .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
-        .agg(min(col("o_orderdate")).as("d0"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("c")).orderBy(col("d0"), col("p"))
-      val edges = fp.withColumn("nxt", lead(col("p"), 1).over(w))
-        .filter(col("nxt").isNotNull && col("nxt") =!= col("p"))
-        .select(col("p").as("src"), col("nxt").as("dst"))
-        .distinct().localCheckpoint(true) // SCC + both BFS sweeps
-      val nodes = fp.select(col("p").as("id")).distinct()
-        .localCheckpoint(true)
+      val (nodePlan, edgePlan) = partTransitionGraph(s, dir)
+      val edges = edgePlan.localCheckpoint(true) // SCC + both BFS sweeps
+      val nodes = nodePlan.localCheckpoint(true)
       val scc = graft.graph.Graph.stronglyConnectedComponents(nodes, edges)
       val coreId = scc.groupBy(col("component"))
         .agg(count(lit(1)).as("n"))
@@ -4917,19 +4910,7 @@ object Queries {
   val qHits = Q(
     "q_hits",
     (s, dir) => {
-      val t = Tables(s, dir)
-      val fp = t.lineitem.filter(col("l_partkey") % 20 === 0)
-        .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("o_custkey") % 4 === 0)
-        .groupBy(col("o_custkey").as("c"), col("l_partkey").as("p"))
-        .agg(min(col("o_orderdate")).as("d0"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("c")).orderBy(col("d0"), col("p"))
-      val edges = fp.withColumn("nxt", lead(col("p"), 1).over(w))
-        .filter(col("nxt").isNotNull && col("nxt") =!= col("p"))
-        .select(col("p").as("src"), col("nxt").as("dst"))
-        .distinct()
-      val nodes = fp.select(col("p").as("id")).distinct()
+      val (nodes, edges) = partTransitionGraph(s, dir)
       graft.graph.Graph.hits(nodes, edges, iters = 3)
     },
     Some("""WITH fp AS MATERIALIZED (

@@ -320,15 +320,14 @@ object Graph {
   def stronglyConnectedComponents(
       nodes: DataFrame, edges: DataFrame,
       maxOuter: Int = 30, maxInner: Int = 100): DataFrame =
-    fwBwRefinement(nodes, edges, maxOuter) { (closed, open, er, outer) =>
+    fwBwRefinement(nodes, edges, maxOuter) { (closed, open, er, erRows, outer) =>
       // below-cap fast path (LocalSolve): once the still-open subgraph
       // fits one task, finish the refinement with one in-task Tarjan
       // pass — the same fixpoint (F = B = SCC min id) without
       // maxInner × maxOuter synchronization rounds. This is the FW-BW
       // tail at ANY scale: open classes shrink monotonically, so
       // production runs land here in late outer rounds too.
-      if (LocalSolve.allLong(er, "src", "dst") &&
-          LocalSolve.fits(er, LocalSolve.MaxEdges)) {
+      if (LocalSolve.allLong(er, "src", "dst") && erRows <= LocalSolve.MaxEdges) {
         val comp = LocalSolve.tarjanComponents(er)
           .select(col("id").as("cid"), col("component"))
         val refinedLocal = open
@@ -346,15 +345,16 @@ object Graph {
   private[graft] def stronglyConnectedComponentsDistributed(
       nodes: DataFrame, edges: DataFrame,
       maxOuter: Int = 30, maxInner: Int = 100): DataFrame =
-    fwBwRefinement(nodes, edges, maxOuter)(fwBwRound(_, _, _, maxInner, _))
+    fwBwRefinement(nodes, edges, maxOuter)(
+      (closed, open, er, _, outer) => fwBwRound(closed, open, er, maxInner, outer))
 
   /** The FW-BW outer loop of [[stronglyConnectedComponents]]:
-    * `round(closed, open, er, outer)` refines the open classes over
-    * their same-class edges `er` and returns the next materialized
-    * partition with its open-node count. */
+    * `round(closed, open, er, erRows, outer)` refines the open classes
+    * over their same-class edges `er` (`erRows` of them) and returns the
+    * next materialized partition with its open-node count. */
   private def fwBwRefinement(
       nodes: DataFrame, edges: DataFrame, maxOuter: Int)(
-      round: (DataFrame, DataFrame, DataFrame, Int) => (DataFrame, Long))
+      round: (DataFrame, DataFrame, DataFrame, Long, Int) => (DataFrame, Long))
       : DataFrame = {
     val e0 = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
       .distinct().localCheckpoint(true) // re-read every outer round
@@ -368,13 +368,13 @@ object Graph {
       val open = part.filter(col("f") =!= col("b"))
       val closed = part.filter(col("f") === col("b"))
       // edges whose endpoints share an OPEN class; closed SCCs are frozen
-      val er = e0
+      // materialized: feeds both directions of propagation
+      val (er, erRows) = LocalSolve.checkpointCounted(e0
         .join(open.select(col("id").as("src"), col("f").as("sf"), col("b").as("sb")), "src")
         .join(open.select(col("id").as("dst"), col("f").as("df_"), col("b").as("db")), "dst")
         .filter(col("sf") === col("df_") && col("sb") === col("db"))
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true) // feeds both directions of propagation
-      val (next, n) = round(closed, open, er, outer)
+        .select(col("src"), col("dst")))
+      val (next, n) = round(closed, open, er, erRows, outer)
       part = next
       openCnt = n
       outer += 1
@@ -635,13 +635,14 @@ object Graph {
     *         frontier emptying — a partial sweep misclassifies. */
   def reachability(
       seeds: DataFrame, edges: DataFrame, maxRounds: Int = 1000): DataFrame = {
-    val (ed, state) = reachabilityInputs(seeds, edges)
+    val (ed, state, inputRows) = reachabilityInputs(seeds, edges)
     // below-cap fast path (LocalSolve): both BFS sweeps in one task —
-    // same round budget and non-convergence throw.
+    // same round budget and non-convergence throw. The task holds both
+    // adjacency directions (one entry per `ed` row) and the seed flags,
+    // so the cap bounds their sum.
     if (LocalSolve.allLong(ed, "src", "dst") &&
         LocalSolve.allLong(state, "id") &&
-        LocalSolve.fits(ed, LocalSolve.MaxEdges) &&
-        LocalSolve.fits(state, LocalSolve.MaxEdges))
+        inputRows <= LocalSolve.MaxEdges)
       LocalSolve.reachabilityFlags(
         ed.filter(col("dir") === 0)
           .select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
@@ -655,25 +656,25 @@ object Graph {
     * above the one-task cap takes. */
   private[graft] def reachabilityDistributed(
       seeds: DataFrame, edges: DataFrame, maxRounds: Int = 1000): DataFrame = {
-    val (ed, state) = reachabilityInputs(seeds, edges)
+    val (ed, state, _) = reachabilityInputs(seeds, edges)
     reachabilityRounds(ed, state, maxRounds)
   }
 
   /** Materialized inputs of [[reachability]]: the direction-tagged edge
     * relation (dir=0: forward, src→dst, propagates f; dir=1: backward,
     * dst→src, propagates b — one relation, one join per round for both
-    * sweeps) and the seed flags. */
+    * sweeps) and the seed flags, with their total row count. */
   private def reachabilityInputs(
-      seeds: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {
+      seeds: DataFrame, edges: DataFrame): (DataFrame, DataFrame, Long) = {
     val e = edges.toDF("src", "dst")
-    val ed = e.select(col("src"), col("dst"), lit(0).as("dir"))
-      .unionAll(e.select(col("dst").as("src"), col("src").as("dst"),
-        lit(1).as("dir")))
-      .localCheckpoint(true) // re-read every round
-    val state = seeds.toDF("id").distinct()
-      .select(col("id"), lit(true).as("f"), lit(true).as("b"))
-      .localCheckpoint(true)
-    (ed, state)
+    val (ed, edRows) = LocalSolve.checkpointCounted( // re-read every round
+      e.select(col("src"), col("dst"), lit(0).as("dir"))
+        .unionAll(e.select(col("dst").as("src"), col("src").as("dst"),
+          lit(1).as("dir"))))
+    val (state, stateRows) = LocalSolve.checkpointCounted(
+      seeds.toDF("id").distinct()
+        .select(col("id"), lit(true).as("f"), lit(true).as("b")))
+    (ed, state, edRows + stateRows)
   }
 
   /** The distributed sweeps of [[reachability]] over its materialized
@@ -862,11 +863,15 @@ object Graph {
     * on src alone, and the node set it fed is a map-side
     * partial-aggregated distinct over the checkpoint (node-count-sized
     * shuffle, cheaper than the wider sort at every scale). */
-  private def weightedEdges(edges: DataFrame): DataFrame = {
+  private def weightedEdges(edges: DataFrame): DataFrame =
+    weightedEdgePlan(edges).localCheckpoint()
+
+  /** [[weightedEdges]] before its checkpoint, for callers that
+    * materialize it themselves. */
+  private def weightedEdgePlan(edges: DataFrame): DataFrame = {
     val ws = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
     edges.toDF("src", "dst")
       .withColumn("w", lit(1.0) / count(lit(1)).over(ws))
-      .localCheckpoint()
   }
 
   /** Node set of a [[weightedEdges]] relation: distinct srcs (every node
@@ -1171,12 +1176,11 @@ object Graph {
     */
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 3, s"k must be ≥ 3, got $k (k=2 truss is every edge)")
-    val e0 = canonical(edges).localCheckpoint(true)
+    val (e0, e0Rows) = LocalSolve.checkpointCounted(canonical(edges))
     // below-cap fast path (LocalSolve): support recompute + peel in one
     // task (same vanish-at-zero-support and maxIter semantics), under
     // the tighter k-truss cap.
-    if (LocalSolve.allLong(e0, "a", "b") &&
-        LocalSolve.fits(e0, LocalSolve.MaxTrussEdges))
+    if (LocalSolve.allLong(e0, "a", "b") && e0Rows <= LocalSolve.MaxTrussEdges)
       LocalSolve.kTrussPeel(e0, k, maxIter)
     else kTrussRounds(e0, k, maxIter)
   }
@@ -1323,15 +1327,14 @@ object Graph {
       damping: Double = 0.85,
       checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val ew = weightedEdges(edges)
+    val (ew, ewRows) = LocalSolve.checkpointCounted(weightedEdgePlan(edges))
     // below-cap fast path (LocalSolve): all power iterations in one
     // task. Per-dst contributions accumulate in a FIXED order — within
     // float-ulp of the distributed partial aggregation's
     // partition-dependent order, absorbed by the r4 rounding every
     // caller applies (the same contract the distributed path's own
     // run-to-run variance already rides on).
-    if (LocalSolve.allLong(ew, "src", "dst") &&
-        LocalSolve.fits(ew, LocalSolve.MaxEdges))
+    if (LocalSolve.allLong(ew, "src", "dst") && ewRows <= LocalSolve.MaxEdges)
       LocalSolve.pageRankLocal(ew, iters, damping)
     else pageRankRounds(ew, iters, damping, checkpointEvery)
   }

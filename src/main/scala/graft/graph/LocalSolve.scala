@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.LongType
 
 import scala.collection.mutable
@@ -18,13 +19,13 @@ import scala.collection.mutable
   * 4 373-edge graph: 10 inner rounds × fixed round overhead, zero bytes
   * of real work). When the edge relation is small enough to fit one
   * task's working set, the exact same fixpoint is a sub-millisecond
-  * in-memory computation — so each loop gates on the (already
-  * checkpointed, hence cheap-to-count) edge count and, below the
-  * cap, runs its fixpoint inside ONE `mapPartitions` task on an
-  * executor instead of N synchronized rounds. This is the standard
-  * hybrid of production graph engines, and it is NOT a local-mode-only
-  * trick: at cluster scale the FW-BW open remainder and the k-truss
-  * peel tail shrink monotonically — the cap is exactly the point where
+  * in-memory computation — so each loop gates on the edge count its
+  * input checkpoint observed and, below the cap, runs its fixpoint
+  * inside ONE `mapPartitions` task on an executor instead of N
+  * synchronized rounds. This is the standard hybrid of production
+  * graph engines, and it is NOT a local-mode-only trick: at cluster
+  * scale the FW-BW open remainder and the k-truss peel tail shrink
+  * monotonically — the cap is exactly the point where
   * paying another synchronization round costs more than finishing the
   * tail in one task (the straggler/tail argument of guide §2.6).
   *
@@ -38,13 +39,14 @@ import scala.collection.mutable
   * executor task (`coalesce(1).mapPartitions`), and the output flows
   * back as a DataFrame into the same downstream joins.
   *
-  * Gating: each caller passes a constant cap to [[fits]] — [[MaxEdges]]
-  * for PageRank, SCC and reachability, [[MaxTrussEdges]] for k-truss —
-  * and only when every graph column is LongType. No setting selects the
-  * tier. A kernel is kept only while a benchmark workload shows it
-  * winning over its distributed loop (perfbench `curation_small` runs
-  * all four); a new kernel comes back only together with such a
-  * workload.
+  * Gating: each caller materializes its input with [[checkpointCounted]]
+  * and compares the observed row count with a constant cap —
+  * [[MaxEdges]] for PageRank, SCC and reachability, [[MaxTrussEdges]]
+  * for k-truss — and only when every graph column is LongType. No
+  * setting selects the tier. A kernel is kept only while a benchmark
+  * workload shows it winning over its distributed loop (perfbench
+  * `curation_small` runs all four); a new kernel comes back only
+  * together with such a workload.
   */
 private[graft] object LocalSolve {
 
@@ -57,10 +59,15 @@ private[graft] object LocalSolve {
     * wins while the listing stays small. */
   final val MaxTrussEdges: Long = 1L << 20
 
-  /** The one size gate: true when `df` has at most `cap` rows. The
-    * caller materializes (checkpoints) `df`, so the count is a cheap
-    * scan, not a recompute. */
-  def fits(df: DataFrame, cap: Long): Boolean = df.count() <= cap
+  /** Eagerly checkpoint `df` and return it with its row count, observed
+    * by the checkpoint's own job: every gate compares this count with
+    * its cap, so a gate starts no job of its own (a `count()` on the
+    * checkpoint ran two more under AQE). */
+  def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val cp = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+    (cp, obs.get("rows").asInstanceOf[Long])
+  }
 
   def allLong(df: DataFrame, cols: String*): Boolean =
     cols.forall(c => df.schema(c).dataType == LongType)

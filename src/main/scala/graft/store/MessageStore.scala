@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 /** Message-store search — graft's `MessageStore.search` (reference:
   * pypeman/msgstore.py:174 and the meta filter/sort semantics at
@@ -196,9 +197,9 @@ final class MessageStore(
   private def appendMutation(
       uuid: String, newState: Option[String], tombstone: Boolean): Unit =
     withStoreLock("mutate") {
-      import spark.implicits._
-      Seq((uuid, newState.orNull, tombstone, seqGen.incrementAndGet()))
-        .toDF("uuid", "new_state", "tombstone", "seq")
+      spark.createDataFrame(
+          java.util.List.of(Row(uuid, newState.orNull, tombstone, seqGen.incrementAndGet())),
+          MessageStore.MutationSchema)
         .coalesce(1)
         .write.mode("append").parquet(mutPath)
       maybeAutoCompact()
@@ -353,7 +354,8 @@ final class MessageStore(
   private def applyMutations(base: DataFrame): DataFrame =
     if (!hasMutations) base
     else {
-      val latest = spark.read.parquet(mutPath)
+      // declared schema: inferring it would start a job on every read
+      val latest = spark.read.schema(MessageStore.MutationSchema).parquet(mutPath)
         .groupBy("uuid")
         .agg(
           max(col("tombstone")).as("_mut_tombstone"),
@@ -470,6 +472,14 @@ object MessageStore {
     * few-KB relation, and a compact (one base rewrite) amortizes over 64
     * point updates. Tune per store via the constructor. */
   val DefaultAutoCompactMutationFiles = 64
+
+  /** One mutation-log record: a state change or a tombstone, ordered by
+    * `seq`. Written by every mutation and read back with this schema. */
+  private val MutationSchema = StructType(Seq(
+    StructField("uuid", StringType),
+    StructField("new_state", StringType),
+    StructField("tombstone", BooleanType, nullable = false),
+    StructField("seq", LongType, nullable = false)))
 
   /** Search over any Msg-shaped DataFrame (store-backed or in-flight). */
   def search(df: DataFrame, q: Search): DataFrame = {
